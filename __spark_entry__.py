@@ -90,7 +90,7 @@ _LINEITEM_SUITE = CheckSuite(
 
 
 def _suite_violations_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
-    res = run_suite(_t(spark, sf_dir, "lineitem"), _LINEITEM_SUITE, persist="viols")
+    res = run_suite(_t(spark, sf_dir, "lineitem"), _LINEITEM_SUITE, persist=True)
     return res.violations.withColumnRenamed("check", "check_name").withColumnRenamed(
         "column", "col_name"
     )
@@ -115,7 +115,7 @@ def _suite_violations_capped_lineitem(spark: SparkSession, sf_dir: str) -> DataF
     behavior is pinned by KATs (test_violation_sampling_*)."""
     res = run_suite(
         _t(spark, sf_dir, "lineitem"), _LINEITEM_SUITE, max_violations_per_check=100_000,
-        persist="viols",
+        persist=True,
     )
     return res.violations_sample.withColumnRenamed("check", "check_name").withColumnRenamed(
         "column", "col_name"
@@ -226,7 +226,7 @@ def _conversation_checks_events(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         ),
     )
-    res = run_suite(_t(spark, sf_dir, "events"), suite, persist="viols")
+    res = run_suite(_t(spark, sf_dir, "events"), suite, persist=True)
     return res.violations.withColumnRenamed("check", "check_name").withColumnRenamed(
         "column", "col_name"
     )
@@ -249,7 +249,7 @@ def _functional_dependency_lineitem(spark: SparkSession, sf_dir: str) -> DataFra
             ),
         ),
     )
-    res = run_suite(_t(spark, sf_dir, "lineitem"), suite, persist="viols")
+    res = run_suite(_t(spark, sf_dir, "lineitem"), suite, persist=True)
     return res.violations.withColumnRenamed("check", "check_name").withColumnRenamed(
         "column", "col_name"
     )
@@ -694,7 +694,7 @@ def _schema_conformance_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
             NonNullCount(columns=_LINEITEM_COLS, min_count=11),
         ),
     )
-    res = run_suite(_t(spark, sf_dir, "lineitem"), suite, persist="viols")
+    res = run_suite(_t(spark, sf_dir, "lineitem"), suite, persist=True)
     return res.violations.withColumnRenamed("check", "check_name").withColumnRenamed(
         "column", "col_name"
     )
@@ -713,7 +713,7 @@ def _non_null_count_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         key_columns=("event_id",),
         checks=(NonNullCount(columns=cols, min_count=6),),
     )
-    res = run_suite(ev, suite, persist="viols")
+    res = run_suite(ev, suite, persist=True)
     return res.violations.select("event_id", F.col("value").alias("n_present"))
 
 
@@ -735,7 +735,7 @@ def _array_positional_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         ),
     )
-    res = run_suite(li, suite, persist="viols")
+    res = run_suite(li, suite, persist=True)
     return res.violations.select("l_orderkey", "l_linenumber", "check", "value")
 
 
@@ -760,7 +760,7 @@ def _dependent_schema_events(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         ),
     )
-    res = run_suite(ev, suite, persist="viols")
+    res = run_suite(ev, suite, persist=True)
     return res.violations.select(
         "event_id", F.col("check").alias("check_name"), F.col("value").alias("detail")
     )
@@ -814,7 +814,7 @@ def _map_props_events(spark: SparkSession, sf_dir: str) -> DataFrame:
             MapRequiredKeys(column="attrs", keys=("k", "debug_trace")),
         ),
     )
-    res = run_suite(ev, suite, persist="viols")
+    res = run_suite(ev, suite, persist=True)
     return res.violations.select(
         "event_id", F.col("check").alias("check_name"), F.col("value").alias("detail")
     )
@@ -848,8 +848,9 @@ def _dedup_clusters_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _group_verdicts_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-GROUP pass/fail (the per-conversation verdict of the north
-    star, exercised per user here): derived lazily from the same slim
-    fused pass as violations — zero extra input scans. A user passes
+    star, exercised per user here): input rows counted per user from
+    a key-column scan, failing rows from the flagged row-violation
+    rows of the same fused pass as violations. A user passes
     iff none of their events fails any row check."""
     from hjsonschema_spark.checks import CheckSuite, Enum, Required
 
@@ -1021,7 +1022,7 @@ def _schema_suite_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     suite = suite_from_schema(
         _EVENTS_DRAFT4_SCHEMA, name="events", key_columns=("event_id",), unique_key=True
     )
-    res = run_suite(_t(spark, sf_dir, "events"), suite, persist="viols")
+    res = run_suite(_t(spark, sf_dir, "events"), suite, persist=True)
     return res.violations.withColumnRenamed("check", "check_name").withColumnRenamed(
         "column", "col_name"
     )
@@ -1072,7 +1073,7 @@ def _nested_struct_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         },
     }
     suite = suite_from_schema(schema, name="events_nested", key_columns=("event_id",))
-    res = run_suite(ev, suite, persist="viols")
+    res = run_suite(ev, suite, persist=True)
     return res.violations.withColumnRenamed("check", "check_name").withColumnRenamed(
         "column", "col_name"
     )

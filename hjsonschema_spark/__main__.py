@@ -111,7 +111,7 @@ def cmd_validate(args) -> int:
         out = args.out
         if out:
             os.makedirs(out, exist_ok=True)
-            # violations first (fills the slim-pass cache), verdicts second
+            # violations first (fills the violation-union cache), verdicts second
             viol = res.violations_sample if res.violations_sample is not None else res.violations
             overwrite_table(viol, os.path.join(out, "violations"))
             overwrite_table(res.verdicts, os.path.join(out, "verdicts"))

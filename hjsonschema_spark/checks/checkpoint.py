@@ -135,9 +135,9 @@ class CheckpointedRun:
                 spark, batch_id, run_id, suite.name, version, batch, None, None, None, "started"
             )
             df = spark.read.parquet(*batch)
-            # persist=True: violations write + summary + verdict-derived
-            # row count = three consumers of one fused pass (CLAUDE.md
-            # invariant: violations materialize FIRST, filling the cache)
+            # persist=True: the violations write fills the cached
+            # violation union, summary() then reads it (CLAUDE.md
+            # invariant: violations materialize FIRST)
             res = run_suite(
                 df, suite, registry=registry, vocab_tables=vocab_tables, persist=True,
                 max_violations_per_check=max_violations_per_check,
@@ -152,14 +152,9 @@ class CheckpointedRun:
             )
             viols.write.mode("append").parquet(self._viol_path)
             summary = res.summary()
-            # row count from the partition verdicts (cache hit on the
-            # slim fused pass) — not a separate df.count() scan
-            n_rows = (
-                res.verdicts.filter(F.col("scope") == "partition")
-                .agg(F.sum("n_rows"))
-                .first()[0]
-                or 0
-            )
+            # a column-free count of the batch's files: no fused pass,
+            # nothing cached (the same count the partition verdicts sum)
+            n_rows = df.count()
             res.unpersist()
             wall = time.perf_counter() - t0
             self._append_ckpt(

@@ -248,12 +248,19 @@ def compile_row_predicate(c: RowCheck) -> Column:
             preds.append(col < c.max if c.exclusive_max else col <= c.max)
         return _guard(col, reduce(lambda a, b: a & b, preds))
     if isinstance(c, Length):
+        # length() walks the string's UTF-8 bytes; octet_length() is
+        # O(1). chars <= bytes <= 4*chars, so the byte count settles
+        # each bound for most rows (Or evaluates its right side only
+        # when the left is false): bytes <= max_len passes the max
+        # test, bytes >= 4*min_len the min test
         col = F.col(c.column)
         preds = []
         if c.min_len is not None:
-            preds.append(F.length(col) >= c.min_len)
+            preds.append(
+                (F.octet_length(col) >= 4 * c.min_len) | (F.length(col) >= c.min_len)
+            )
         if c.max_len is not None:
-            preds.append(F.length(col) <= c.max_len)
+            preds.append((F.octet_length(col) <= c.max_len) | (F.length(col) <= c.max_len))
         return _guard(col, reduce(lambda a, b: a & b, preds))
     if isinstance(c, Pattern):
         col = F.col(c.column)

@@ -71,35 +71,6 @@ class ValidationResult:
     # bounded per-check sample of violations (only when run_suite was
     # given max_violations_per_check) — counts in verdicts stay exact
     violations_sample: DataFrame | None = None
-    _slim: DataFrame | None = field(default=None, repr=False)
-
-    @property
-    def verdicts(self) -> DataFrame:
-        if callable(self._verdicts_src):
-            self._verdicts_src = self._verdicts_src()
-        return self._verdicts_src
-
-    def group_verdicts(self, group_columns: list[str] | tuple) -> DataFrame:
-        """Per-group row-check pass/fail (e.g. per conversation:
-        group_columns=("conv_id",)). Derives lazily from the SAME slim
-        fused pass as violations/partition verdicts — zero extra input
-        scans when run_suite(persist=True). Group columns must be a
-        subset of the suite's key_columns (the slim pass carries only
-        keys + partition id + failures). Covers row-scope checks;
-        table-scope checks aggregate above group level by design."""
-        missing = [g for g in group_columns if g not in self.suite.key_columns]
-        if missing:
-            raise ConfigInvalid(
-                f"group_verdicts: {missing} not in key_columns {self.suite.key_columns}"
-            )
-        return (
-            self._slim.groupBy(*group_columns)
-            .agg(
-                F.count(F.lit(1)).alias("n_rows"),
-                F.sum((F.size("_failures") > 0).cast("long")).alias("n_violations"),
-            )
-            .withColumn("passed", F.col("n_violations") == 0)
-        )
     _summary: dict[str, Any] | None = field(default=None, repr=False)
     _persisted: tuple = field(default=(), repr=False)
     # violations before the byte-stability global sort — clean_rows'
@@ -114,6 +85,39 @@ class ValidationResult:
     # True when run_suite fanned the input out (narrow/one-row-group
     # scan): clean_rows then pins its row filter ABOVE that exchange
     _fanned: bool = field(default=False, repr=False)
+    # the fused pass's input before any fan-out: group_verdicts counts
+    # its rows from a key-column scan of it
+    _input: DataFrame | None = field(default=None, repr=False)
+    # one violation row per input row that failed >=1 row check (its
+    # first failure), read from the violation union; None when the
+    # suite has no row checks
+    _flagged: DataFrame | None = field(default=None, repr=False)
+
+    @property
+    def verdicts(self) -> DataFrame:
+        if callable(self._verdicts_src):
+            self._verdicts_src = self._verdicts_src()
+        return self._verdicts_src
+
+    def group_verdicts(self, group_columns: list[str] | tuple) -> DataFrame:
+        """Per-group row-check pass/fail (e.g. per conversation:
+        group_columns=("conv_id",)). n_rows counts each group's input
+        rows from a key-column scan (no fused pass); n_violations counts
+        its rows with >=1 row-check failure from the flagged violation
+        rows — a read of the cached violation union when
+        run_suite(persist=True). Group columns must be a subset of the
+        suite's key_columns (violation rows carry only keys). Covers
+        row-scope checks; table-scope checks aggregate above group
+        level by design."""
+        missing = [g for g in group_columns if g not in self.suite.key_columns]
+        if missing:
+            raise ConfigInvalid(
+                f"group_verdicts: {missing} not in key_columns {self.suite.key_columns}"
+            )
+        by = list(group_columns)
+        return _row_pass_counts(self._input.select(*by), self._flagged, by).withColumn(
+            "passed", F.col("n_violations") == 0
+        )
 
     def clean_rows(self, strict: bool = True) -> DataFrame:
         """The validate-and-filter surface: input rows that passed,
@@ -129,8 +133,9 @@ class ValidationResult:
 
         strict=True (default) — additionally anti-joins the row-keyed
         violation set on key_columns (one hash exchange of keys only;
-        with run_suite(persist=True) the violation side reuses the
-        cached union, no second input scan), so rows implicated in
+        the violation side is the table-scope violations alone — a
+        row-check violation's row already failed the filter — so the
+        fused pass does not run a second time), so rows implicated in
         key-scoped table checks (UniqueKey, Monotonic) are quarantined
         too. Group-scoped violations (Contiguous gaps — emitted with a
         NULL order position, no single culpable row) never match the
@@ -213,45 +218,60 @@ class ValidationResult:
         return self._summary
 
 
-def _slim_pass(checked: DataFrame, key_columns: tuple) -> DataFrame:
-    """The fused pass projected to keys + partition id + failure
-    structs — no payload columns (text etc.), so it is cheap to persist
-    and BOTH the violation rows and the per-partition verdicts derive
-    from ONE execution (one input scan) of the row pass."""
-    return checked.select(*key_columns, F.spark_partition_id().alias("_pid"), "_failures")
-
-
-def _row_violations(slim: DataFrame, key_columns: tuple) -> DataFrame:
+def _row_violations(checked: DataFrame, key_columns: tuple) -> DataFrame:
+    """One violation row per row-check failure, straight from the fused
+    pass, tagged with two internal columns the public ``violations``
+    drops: ``_pid`` (input partition id) and ``_first`` (the row's first
+    failure — exactly one per failing row), from which the partition
+    and group verdicts count failing rows without re-running the pass."""
     # no filter(size(_failures) > 0) before the explode: Generate with
     # outer=false already drops rows whose array is empty, and the
     # filter made the (expensive) fused failure-array expression
     # evaluate TWICE per row — once in the Filter condition, once in
     # the Project feeding the explode (plans/r06 suite_violations
-    # before-plan, operators (2)+(3))
-    f = F.explode("_failures").alias("f")
-    return slim.select(*key_columns, f).select(
-        *key_columns, "f.check", "f.column", "f.value"
+    # before-plan, operators (2)+(3)). The partition id shares the
+    # projection that computes `_failures` on purpose: a
+    # nondeterministic Project stops Catalyst's inferred size(...) > 0
+    # filter (InferFiltersFromGenerate) from being pushed below it and
+    # re-introducing exactly that double evaluation.
+    tagged = checked.select(*key_columns, F.spark_partition_id().alias("_pid"), "_failures")
+    return tagged.select(
+        *key_columns, "_pid", F.posexplode("_failures").alias("_pos", "f")
+    ).select(
+        *key_columns, "f.check", "f.column", "f.value", "_pid",
+        (F.col("_pos") == 0).alias("_first"),
     )
 
 
-def _partition_verdicts(slim: DataFrame) -> DataFrame:
-    """Per-input-partition pass/fail, aggregated from the slim fused
-    pass itself (NOT a second count scan of the input): n_rows = rows
-    seen, n_violations = rows with >=1 failure."""
-    return (
-        slim.groupBy(F.col("_pid").alias("partition_id"))
-        .agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.sum((F.size("_failures") > 0).cast("long")).alias("n_violations"),
+def _row_pass_counts(rows: DataFrame, flagged: DataFrame | None, by: list) -> DataFrame:
+    """n_rows / n_violations per ``by`` group: ``rows`` holds one row
+    per input row, ``flagged`` one per failing input row (None: no row
+    checks). ONE aggregation over their union — NULL group keys stay
+    one group, as in a plain groupBy (a join would drop them)."""
+    counted = rows.select(*by, F.lit(1).alias("_r"), F.lit(0).cast("long").alias("_b"))
+    if flagged is not None:
+        counted = counted.unionByName(
+            flagged.select(
+                *by, F.lit(None).cast("int").alias("_r"), F.lit(1).cast("long").alias("_b")
+            )
         )
-        .select(
-            F.lit("partition").alias("scope"),
-            "partition_id",
-            F.lit(None).cast("string").alias("check"),
-            "n_rows",
-            "n_violations",
-            (F.col("n_violations") == 0).alias("passed"),
-        )
+    return counted.groupBy(*by).agg(
+        F.count("_r").alias("n_rows"), F.sum("_b").alias("n_violations")
+    )
+
+
+def _partition_verdicts(checked: DataFrame, flagged: DataFrame | None) -> DataFrame:
+    """Per-input-partition pass/fail: n_rows from a column-pruned count
+    of the fused pass's input by partition id (no fused pass, nothing
+    cached), n_violations from the flagged violation rows."""
+    rows = checked.select(F.spark_partition_id().alias("_pid"))
+    return _row_pass_counts(rows, flagged, ["_pid"]).select(
+        F.lit("partition").alias("scope"),
+        F.col("_pid").alias("partition_id"),
+        F.lit(None).cast("string").alias("check"),
+        "n_rows",
+        "n_violations",
+        (F.col("n_violations") == 0).alias("passed"),
     )
 
 
@@ -350,23 +370,22 @@ def run_suite(
     registry: SuiteRegistry | None = None,
     vocab_tables: dict[str, DataFrame] | None = None,
     include_stats: bool = False,
-    persist: "bool | str" = False,
+    persist: bool = False,
     max_violations_per_check: int | None = None,
 ) -> ValidationResult:
     """Compile + execute a suite against a DataFrame.
 
-    persist=True caches the fused-pass output and the (unsorted)
-    violations union so that consuming violations AND verdicts AND
-    summary() does not re-execute the table passes — the right mode
-    when more than one output is materialized.
-
-    persist="viols" caches ONLY the (small) unsorted violations union,
-    not the n_rows-sized slim pass: the right mode when a caller
-    materializes just the globally sorted ``violations`` — the sort's
-    RangePartitioning boundary sampling otherwise executes the whole
-    union pipeline a second time (sample job + output job), doubling
-    every scan and shuffle below the sort (guide §2.4; measured on
-    suite_violations_lineitem)."""
+    persist=True caches the (unsorted) violation union — the only
+    cached frame, as small as the violation count — so consuming
+    violations AND verdicts AND summary() runs the fused row pass and
+    the table passes once. It also saves a pass when ``violations`` is
+    the only output: the global sort's RangePartitioning boundary
+    sampling otherwise executes the whole union pipeline a second time
+    (sample job + output job), doubling every scan and shuffle below
+    the sort (guide §2.4; measured on suite_violations_lineitem).
+    Partition and group verdicts never need an input-sized cache: they
+    count input rows from a column-pruned scan and failing rows from
+    the violation union's flagged rows."""
     suite.validate_config()  # schema validated before data (Draft4.hs:134-148)
     reg = registry or SuiteRegistry().add(suite)
     if suite.name not in reg.suites:
@@ -545,53 +564,31 @@ def run_suite(
     # cheap partial agg measured as a net LOSS (drift_suite +7%,
     # conversation_checks +15% before this guard).
     fanned = False
+    df_in = df
     if row_checks:
         from hjsonschema_spark.functions import fan_out
 
-        _df_in = df
         df = fan_out(df, by=tuple(suite.key_columns))
-        fanned = df is not _df_in
+        fanned = df is not df_in
     # barrier=fanned: keep Catalyst's inferred size(_failures)>0 filter
     # (InferFiltersFromGenerate, below the violations explode) from
     # being substituted through the fan-out exchange into the serial
     # scan task — see compile._pushdown_barrier
     checked = C.compile_fused_pass(df, row_checks, barrier=fanned)
-    # NOTE: the full `checked` frame (input + _failures) is never
-    # persisted — it carries the whole payload (text included), so a
-    # cache write costs more than re-running the codegen'd fused pass.
-    # Instead its narrow projection (keys + pid + failures) is
-    # persisted: violations AND per-partition verdicts both derive from
-    # it, so the input is scanned exactly ONCE per row pass.
-    slim = _slim_pass(checked, keys)
-    persisted: list[DataFrame] = []
-    persist_slim = persist is True  # "viols" mode skips the big slim cache
-    if persist_slim:
-        # Storage level is tunable because the slim frame is large (one
-        # row per input row): in-heap caching of ~10^8 rows competes
-        # with 32 concurrent task buffers for the unified memory pool
-        # and can degrade the whole job via GC/eviction. "disk" keeps
-        # the bytes off-heap (RAM-speed when spark.local.dir is tmpfs);
-        # "off" skips the cache — re-running the codegen'd row pass per
-        # consumer can be cheaper than caching when the input itself is
-        # memory-resident.
-        import os as _os
+    # NOTE: nothing input-sized is ever persisted — `checked` carries
+    # the whole payload, and even its keys-only projection (one row per
+    # input row) cost more to cache than the consumers saved. Row
+    # violations explode straight from the fused pass into the
+    # violation union (cached when persist=True); the partition
+    # verdicts count input rows from a column-pruned scan instead.
 
-        from pyspark import StorageLevel
-
-        mode = _os.environ.get("SPARK_GRAFT_SLIM_PERSIST", "memory")
-        if mode == "disk":
-            slim = slim.persist(StorageLevel.DISK_ONLY)
-            persisted.append(slim)
-        elif mode != "off":
-            slim = slim.persist()
-            persisted.append(slim)
     # an aggregate-only suite (no row checks) must not pay a row-pass
     # scan in the violations plan: size([]) > 0 is always false but
     # Catalyst does not fold the scan away, so skip the branch outright
-    viols = [_row_violations(slim, keys)] if row_checks else []
+    viols = [_row_violations(checked, keys)] if row_checks else []
     # verdict frames are assembled lazily (ValidationResult._verdicts_src):
     # each part is a zero-arg factory; config validation stays eager
-    verdict_parts: list = [lambda: _partition_verdicts(slim)]
+    verdict_parts: list = [lambda: _partition_verdicts(checked, flagged)]
 
     # every NullRateMax + AggBounds folds into ONE lazy aggregation pass
     # (column-pruned scan of just the checked columns, no eager .first()
@@ -668,40 +665,40 @@ def run_suite(
     # the fused row pass to run a second time inside the clean_rows job
     # (a full extra input scan, measured ~2.4s of 7.2s on the bench's
     # clean_rows_lineitem). Same output, one fewer scan.
-    n_table_branches = len(viols) - (1 if row_checks else 0)
-    if n_table_branches > 0:
-        tv = viols[1] if row_checks else viols[0]
-        for v in viols[(2 if row_checks else 1):]:
-            tv = tv.unionByName(v)
-        table_viols = tv
+    from hjsonschema_spark.session import cached_local_df
+
+    spark = df.sparkSession
+    table_branches = viols[1:] if row_checks else viols
+    if table_branches:
+        table_viols = table_branches[0]
+        for v in table_branches[1:]:
+            table_viols = table_viols.unionByName(v)
     else:
         # no table-scope violation checks: an explicit EMPTY frame (not
-        # None) so clean_rows(strict) anti-joins a broadcast-empty side
+        # None) so clean_rows(strict) anti-joins an empty local side
         # instead of falling back to the full union
-        _dt = dict(df.dtypes)
-        table_viols = df.sparkSession.createDataFrame(
-            [],
+        key_types = dict(df.dtypes)
+        table_viols = cached_local_df(
+            spark,
+            (),
             ", ".join(
-                [f"`{k}` {_dt.get(k, 'string')}" for k in keys]
+                [f"`{k}` {key_types.get(k, 'string')}" for k in keys]
                 + [f"{c} string" for c in _VIOL_TAIL]
             ),
         )
-    if not viols:
-        # no violation-producing checks at all: empty frame, right schema
-        dtypes = dict(df.dtypes)
-        schema = ", ".join(
-            [f"`{k}` {dtypes.get(k, 'string')}" for k in keys]
-            + [f"{c} string" for c in _VIOL_TAIL]
-        )
-        viols = [df.sparkSession.createDataFrame([], schema)]
+    # no violation-producing checks at all: the empty frame, right schema
+    viols = viols or [table_viols]
     all_viols = viols[0]
     for v in viols[1:]:
-        all_viols = all_viols.unionByName(v)
+        # table-scope branches get NULL _pid/_first
+        all_viols = all_viols.unionByName(v, allowMissingColumns=True)
+    persisted: list[DataFrame] = []
     if persist:
         all_viols = all_viols.persist()
         persisted.append(all_viols)
+    flagged = all_viols.filter(F.col("_first")) if row_checks else None
     # global sort => byte-stable violation output across partition counts
-    sorted_viols = all_viols.orderBy(*keys, "check")
+    sorted_viols = all_viols.orderBy(*keys, "check").select(*keys, *_VIOL_TAIL)
 
     # Bounded violation output for web-scale runs: at 10^12 rows one
     # broken check makes the violations table as large as the input.
@@ -737,10 +734,6 @@ def run_suite(
             .orderBy(*keys, "check")
         )
 
-    from hjsonschema_spark.session import cached_local_df
-
-    spark = df.sparkSession
-
     def _build_verdicts() -> DataFrame:
         ids_df = cached_local_df(
             spark, tuple((i,) for i in viol_check_ids), "check string"
@@ -764,8 +757,9 @@ def run_suite(
         parts = [p() for p in verdict_parts]
         if schema_verdicts:
             parts.append(
-                spark.createDataFrame(
-                    [("schema", None, cid, None, n_bad, ok) for cid, ok, n_bad in schema_verdicts],
+                cached_local_df(
+                    spark,
+                    tuple(("schema", None, cid, None, n_bad, ok) for cid, ok, n_bad in schema_verdicts),
                     "scope string, partition_id int, check string, n_rows long, n_violations long, passed boolean",
                 )
             )
@@ -781,9 +775,10 @@ def run_suite(
         _verdicts_src=_build_verdicts,
         stats=column_stats(df) if include_stats else None,
         violations_sample=sample,
-        _slim=slim,
         _viols_unsorted=all_viols,
         _table_viols_unsorted=table_viols,
         _persisted=tuple(persisted),
         _fanned=fanned,
+        _input=df_in,
+        _flagged=flagged,
     )

@@ -92,20 +92,52 @@ _LOCAL_DF_MEMO: dict = {}
 
 
 def cached_local_df(spark: SparkSession, rows: tuple, schema: str):
-    """Memoized createDataFrame for SMALL STATIC local relations (check
-    id lists, literal vocabularies). createDataFrame costs a py4j
-    round-trip burst (~30-80 ms) and bench/production loops rebuild the
-    identical relation every run. Keyed on the session OBJECT (not its
-    id — holding the reference also prevents id reuse after gc), so a
-    new session never sees a stale frame. Plan-construction memo only:
-    rows must be static configuration, never data-derived."""
+    """A SMALL STATIC local relation (check id lists, literal
+    vocabularies) as a JVM ``LocalRelation``: it plans as a
+    LocalTableScan — no job, no Python worker — where createDataFrame
+    over a list plans as a PythonRDD scan that starts Python-worker
+    tasks in every job reading it (a ref-join broadcast, a verdict
+    union). Same column names and types as ``createDataFrame(rows,
+    schema)``, every column nullable, zero rows allowed.
+
+    Memoized: building the relation costs a parse and analysis, and
+    bench/production loops rebuild the identical relation every run.
+    Keyed on the session OBJECT (not its id — holding the reference
+    also prevents id reuse after gc), so a new session never sees a
+    stale frame. Plan-construction memo only: rows must be static
+    configuration, never data-derived."""
     key = (spark, schema, rows)
     df = _LOCAL_DF_MEMO.get(key)
     if df is None:
         if len(_LOCAL_DF_MEMO) >= 256:
             _LOCAL_DF_MEMO.clear()
-        df = _LOCAL_DF_MEMO[key] = spark.createDataFrame(list(rows), schema)
+        df = _LOCAL_DF_MEMO[key] = _values_df(spark, rows, schema)
     return df
+
+
+def _sql_literal(v, type_sql: str) -> str:
+    if v is None:
+        return f"CAST(NULL AS {type_sql})"
+    text = str(v).replace("\\", "\\\\").replace("'", "\\'")
+    return f"CAST('{text}' AS {type_sql})"
+
+
+def _values_df(spark: SparkSession, rows: tuple, schema: str):
+    """Inline ``VALUES`` table of ``rows`` typed by the DDL ``schema``.
+    A trailing all-NULL sentinel row makes every column nullable (as
+    createDataFrame's DDL schema does) and gives the zero-row case a
+    typed row; ``limit`` drops it, folded into the LocalRelation at
+    optimization."""
+    from pyspark.sql.types import DataType
+
+    fields = DataType.fromDDL(schema).fields
+    types = [f.dataType.simpleString() for f in fields]
+    tuples = [
+        "(" + ", ".join(_sql_literal(v, t) for v, t in zip(row, types, strict=True)) + ")"
+        for row in (*rows, (None,) * len(fields))
+    ]
+    names = ", ".join("`" + f.name.replace("`", "``") + "`" for f in fields)
+    return spark.sql(f"SELECT * FROM VALUES {', '.join(tuples)} AS t({names})").limit(len(rows))
 
 
 def iceberg_available(spark: SparkSession) -> bool:

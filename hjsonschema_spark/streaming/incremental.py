@@ -52,7 +52,7 @@ def validate_stream(
         res = run_suite(batch_df, suite, vocab_tables=vocab_tables, persist=True)
         # violations FIRST (cache-fill ordering), verdicts second,
         # unpersist before the next micro-batch — without it a long
-        # stream accumulates one ~batch-size cache per trigger and
+        # stream accumulates one violation-union cache per trigger and
         # GC-thrashes the executors (same leak fixed in bench/checkpoint)
         res.violations.withColumn("batch_id", F.lit(batch_id)).write.mode("append").parquet(
             f"{out_path}/violations"

@@ -518,9 +518,10 @@ def test_column_stats_one_pass(spark):
     assert out["conv_id"]["p50"] is None
 
 
-def test_group_verdicts_from_slim_pass(spark):
-    """group_verdicts: per-group pass/fail derived from the slim fused
-    pass (row-scope checks only), group cols restricted to key_columns."""
+def test_group_verdicts_from_flagged_violations(spark):
+    """group_verdicts: per-group pass/fail from input row counts and the
+    flagged row violations (row-scope checks only), group cols
+    restricted to key_columns."""
     rows = [
         ("c1", 0, "user"), ("c1", 1, None),      # c1: one bad row
         ("c2", 0, "user"), ("c2", 1, "assistant"),  # c2: clean
