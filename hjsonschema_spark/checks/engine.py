@@ -260,12 +260,50 @@ def _row_pass_counts(rows: DataFrame, flagged: DataFrame | None, by: list) -> Da
     )
 
 
-def _partition_verdicts(checked: DataFrame, flagged: DataFrame | None) -> DataFrame:
-    """Per-input-partition pass/fail: n_rows from a column-pruned count
-    of the fused pass's input by partition id (no fused pass, nothing
-    cached), n_violations from the flagged violation rows."""
-    rows = checked.select(F.spark_partition_id().alias("_pid"))
-    return _row_pass_counts(rows, flagged, ["_pid"]).select(
+# logical operators that leave every row in the partition it came from
+_NARROW_NODES = frozenset({"Project", "Filter", "Union", "Generate", "Sample", "SubqueryAlias"})
+
+
+def _fixed_partitions(df: DataFrame) -> bool:
+    """True when every query over ``df`` sees the same rows in each
+    partition, whichever columns it reads: the optimized plan (cached
+    fragments already substituted) has only narrow operators above its
+    leaves. A shuffle inside it is re-planned by AQE per query — a
+    column-pruned read can coalesce its partitions differently, or turn
+    a join into a broadcast — so partition ids taken in two queries
+    would not name the same rows."""
+    stack = [df._jdf.queryExecution().optimizedPlan()]
+    while stack:
+        node = stack.pop()
+        children = node.children()
+        n = children.size()
+        if n and node.nodeName() not in _NARROW_NODES:
+            return False
+        stack.extend(children.apply(i) for i in range(n))
+    return True
+
+
+def _partition_verdicts(
+    checked: DataFrame, flagged: DataFrame | None, fixed: bool
+) -> DataFrame:
+    """Per-input-partition pass/fail. ``fixed`` (see _fixed_partitions):
+    n_rows from a column-pruned count of the fused pass's input by
+    partition id (no fused pass, nothing cached), n_violations from the
+    flagged violation rows. Otherwise both from ONE groupBy over the
+    fused pass, so they count the same partitions."""
+    pid = F.spark_partition_id().alias("_pid")
+    if fixed or flagged is None:
+        counts = _row_pass_counts(checked.select(pid), flagged, ["_pid"])
+    else:
+        counts = (
+            checked.select(pid, "_failures")
+            .groupBy("_pid")
+            .agg(
+                F.count(F.lit(1)).alias("n_rows"),
+                F.sum((F.size("_failures") > 0).cast("long")).alias("n_violations"),
+            )
+        )
+    return counts.select(
         F.lit("partition").alias("scope"),
         F.col("_pid").alias("partition_id"),
         F.lit(None).cast("string").alias("check"),
@@ -383,9 +421,13 @@ def run_suite(
     sampling otherwise executes the whole union pipeline a second time
     (sample job + output job), doubling every scan and shuffle below
     the sort (guide §2.4; measured on suite_violations_lineitem).
+    A suite with no violation-producing checks caches nothing.
     Partition and group verdicts never need an input-sized cache: they
     count input rows from a column-pruned scan and failing rows from
-    the violation union's flagged rows."""
+    the violation union's flagged rows. The one exception is partition
+    verdicts over an input whose plan holds a shuffle: its partitions
+    are re-planned per query, so both counts come from one groupBy over
+    the fused pass instead."""
     suite.validate_config()  # schema validated before data (Draft4.hs:134-148)
     reg = registry or SuiteRegistry().add(suite)
     if suite.name not in reg.suites:
@@ -580,7 +622,8 @@ def run_suite(
     # input row) cost more to cache than the consumers saved. Row
     # violations explode straight from the fused pass into the
     # violation union (cached when persist=True); the partition
-    # verdicts count input rows from a column-pruned scan instead.
+    # verdicts count input rows from a column-pruned scan instead
+    # (see _partition_verdicts for inputs whose partitions move).
 
     # an aggregate-only suite (no row checks) must not pay a row-pass
     # scan in the violations plan: size([]) > 0 is always false but
@@ -588,7 +631,9 @@ def run_suite(
     viols = [_row_violations(checked, keys)] if row_checks else []
     # verdict frames are assembled lazily (ValidationResult._verdicts_src):
     # each part is a zero-arg factory; config validation stays eager
-    verdict_parts: list = [lambda: _partition_verdicts(checked, flagged)]
+    verdict_parts: list = [
+        lambda: _partition_verdicts(checked, flagged, _fixed_partitions(df_in))
+    ]
 
     # every NullRateMax + AggBounds folds into ONE lazy aggregation pass
     # (column-pruned scan of just the checked columns, no eager .first()
@@ -665,7 +710,7 @@ def run_suite(
     # the fused row pass to run a second time inside the clean_rows job
     # (a full extra input scan, measured ~2.4s of 7.2s on the bench's
     # clean_rows_lineitem). Same output, one fewer scan.
-    from hjsonschema_spark.session import cached_local_df
+    from hjsonschema_spark.session import cached_local_df, local_df
 
     spark = df.sparkSession
     table_branches = viols[1:] if row_checks else viols
@@ -687,6 +732,8 @@ def run_suite(
             ),
         )
     # no violation-producing checks at all: the empty frame, right schema
+    # (shared through the memo, so never persisted — nothing to save)
+    persist = persist and bool(viols)
     viols = viols or [table_viols]
     all_viols = viols[0]
     for v in viols[1:]:
@@ -757,7 +804,7 @@ def run_suite(
         parts = [p() for p in verdict_parts]
         if schema_verdicts:
             parts.append(
-                cached_local_df(
+                local_df(
                     spark,
                     tuple(("schema", None, cid, None, n_bad, ok) for cid, ok, n_bad in schema_verdicts),
                     "scope string, partition_id int, check string, n_rows long, n_violations long, passed boolean",

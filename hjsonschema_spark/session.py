@@ -105,13 +105,14 @@ def cached_local_df(spark: SparkSession, rows: tuple, schema: str):
     Keyed on the session OBJECT (not its id — holding the reference
     also prevents id reuse after gc), so a new session never sees a
     stale frame. Plan-construction memo only: rows must be static
-    configuration, never data-derived."""
+    configuration, never data-derived — build anything else with
+    ``local_df``."""
     key = (spark, schema, rows)
     df = _LOCAL_DF_MEMO.get(key)
     if df is None:
         if len(_LOCAL_DF_MEMO) >= 256:
             _LOCAL_DF_MEMO.clear()
-        df = _LOCAL_DF_MEMO[key] = _values_df(spark, rows, schema)
+        df = _LOCAL_DF_MEMO[key] = local_df(spark, rows, schema)
     return df
 
 
@@ -122,8 +123,9 @@ def _sql_literal(v, type_sql: str) -> str:
     return f"CAST('{text}' AS {type_sql})"
 
 
-def _values_df(spark: SparkSession, rows: tuple, schema: str):
-    """Inline ``VALUES`` table of ``rows`` typed by the DDL ``schema``.
+def local_df(spark: SparkSession, rows: tuple, schema: str):
+    """Inline ``VALUES`` table of ``rows`` typed by the DDL ``schema``
+    (unmemoized ``cached_local_df``).
     A trailing all-NULL sentinel row makes every column nullable (as
     createDataFrame's DDL schema does) and gives the zero-row case a
     typed row; ``limit`` drops it, folded into the LocalRelation at

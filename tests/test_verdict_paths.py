@@ -1,7 +1,8 @@
 """Partition and group verdicts derive from the violation union plus a
 column-pruned row count — no input-sized frame is cached. These tests
 pin those outputs to a reference built the direct way (a groupBy over
-the fused pass itself), the single cached frame of
+the fused pass itself) — also over inputs whose shuffles AQE re-plans
+per query — the single cached frame of
 run_suite(persist=True), the byte-count shortcut of the Length kernel,
 and the local relations built by cached_local_df."""
 
@@ -26,13 +27,16 @@ from hjsonschema_spark.checks import (
     Enum,
     Length,
     NotNullIf,
+    NullRateMax,
     Pattern,
     RefIntegrity,
     Required,
+    TypeIs,
     UniqueKey,
     run_suite,
 )
 from hjsonschema_spark.checks.compile import compile_row_predicate
+from hjsonschema_spark.checks.engine import _fixed_partitions
 from hjsonschema_spark.session import cached_local_df
 from hjsonschema_spark.sources import ROLE_VOCAB, TranscriptGen, tool_vocab_df
 
@@ -132,12 +136,64 @@ def test_partition_verdicts_match_fused_pass_reference(spark, inputs, name, pers
         inputs[name], FULL, vocab_tables={"tools": tool_vocab_df(spark)}, persist=persist
     )
     assert res._fanned == (name == "single")
+    assert _fixed_partitions(inputs[name])
     res.violations.write.format("noop").mode("overwrite").save()
     got = res.verdicts.filter("scope = 'partition'")
     want = _reference_partition_verdicts(res)
     assert _rows(got) == _rows(want)
     assert sum(r["n_violations"] for r in got.collect()) > 0
     assert res.verdicts.schema == VERDICT_SCHEMA
+    res.unpersist(blocking=True)
+
+
+@pytest.fixture
+def small_aqe_partitions(spark):
+    """AQE settings under which the coalesced partition layout of a
+    shuffle depends on how many bytes each shuffle row carries."""
+    conf = {
+        "spark.sql.shuffle.partitions": "32",
+        "spark.sql.adaptive.coalescePartitions.parallelismFirst": "false",
+        "spark.sql.adaptive.coalescePartitions.minPartitionSize": "1b",
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes": "8k",
+    }
+    old = {k: spark.conf.get(k, None) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
+    yield
+    for k, v in old.items():
+        if v is None:
+            spark.conf.unset(k)
+        else:
+            spark.conf.set(k, v)
+
+
+@pytest.mark.parametrize("shape", ["repartition_by_key", "self_join", "dedup"])
+@pytest.mark.parametrize("persist", [False, True])
+def test_partition_verdicts_over_replannable_shuffle(
+    spark, gen_df, small_aqe_partitions, shape, persist
+):
+    """An unpersisted input whose plan holds a shuffle AQE re-plans per
+    query: a column-pruned count of it can coalesce (or broadcast)
+    differently from the fused pass, so partition ids of separate
+    executions need not name the same rows. Verdicts must still equal
+    the one-plan reference and account for every row."""
+    if shape == "repartition_by_key":
+        df = gen_df.repartition("conv_id")
+    elif shape == "self_join":
+        df = gen_df.join(gen_df.select("conv_id").distinct(), "conv_id")
+    else:
+        df = gen_df.dropDuplicates(["conv_id", "turn_idx"])
+    assert not _fixed_partitions(df)
+    res = run_suite(df, FULL, vocab_tables={"tools": tool_vocab_df(spark)}, persist=persist)
+    res.violations.write.format("noop").mode("overwrite").save()
+    got = res.verdicts.filter("scope = 'partition'").collect()
+    assert all(r["n_violations"] <= r["n_rows"] for r in got)
+    assert sum(r["n_rows"] for r in got) == df.count()
+    failing = res.checked.filter(F.size("_failures") > 0).count()
+    assert sum(r["n_violations"] for r in got) == failing > 0
+    assert _rows(res.verdicts.filter("scope = 'partition'")) == _rows(
+        _reference_partition_verdicts(res)
+    )
     res.unpersist(blocking=True)
 
 
@@ -183,6 +239,42 @@ def test_persist_caches_only_the_violation_union(spark, inputs):
     assert res._persisted[0].count() == summary["n_violations"] > 0
     res.unpersist(blocking=True)
     assert cached_rdd_ids() == before
+
+
+def test_persist_without_violation_checks_caches_nothing(spark, inputs):
+    """With no violation-producing checks the violation frame is the
+    empty local relation every such run shares through the memo:
+    persist=True must leave it alone, so one result's unpersist()
+    cannot reach another's."""
+    from pyspark import StorageLevel
+
+    suite = CheckSuite(
+        name="agg_only", key_columns=KEYS, checks=(NullRateMax(column="role", max_rate=0.5),)
+    )
+    a = run_suite(inputs["cached"], suite, persist=True)
+    b = run_suite(inputs["multi"], suite, persist=True)
+    assert a._viols_unsorted is b._viols_unsorted
+    assert a._persisted == b._persisted == ()
+    assert a._viols_unsorted.storageLevel == StorageLevel.NONE
+    a.unpersist(blocking=True)
+    assert b.violations.count() == 0 and b.passed()
+
+
+def test_schema_verdicts_bypass_local_df_memo(spark, inputs):
+    """Schema verdict rows depend on the input's schema, so their frame
+    is built fresh — the memo holds static configuration only."""
+    from hjsonschema_spark.session import _LOCAL_DF_MEMO
+
+    suite = CheckSuite(
+        name="typed",
+        key_columns=KEYS,
+        checks=(TypeIs(column="role", json_type="string"), TypeIs(column="role", type_name="int")),
+    )
+    before = set(_LOCAL_DF_MEMO)
+    res = run_suite(inputs["cached"], suite)
+    got = res.verdicts.filter("scope = 'schema'").collect()
+    assert sorted((r["passed"], r["n_violations"]) for r in got) == [(False, 1), (True, None)]
+    assert not any("passed boolean" in key[1] for key in set(_LOCAL_DF_MEMO) - before)
 
 
 def test_group_verdicts_same_with_and_without_fan_out(spark, inputs):
